@@ -735,109 +735,101 @@ def _require_numeric_ids(pairs: DataFrame, id_a: str, id_b: str) -> None:
             )
 
 
+# Pair count at or below which connected_components collects the pair
+# list and labels it with a driver union-find; above it the graph stays
+# distributed (alternating star contraction). Measured on local[4], 4
+# vCPUs, on chains of 2 pairs / 3 nodes with ids below 2^62 (the 1M-doc
+# stress shape: 70k pairs, 120k nodes), count of the result included:
+#   pairs   driver  star    collected rows (peak with union-find)
+#   130     0.6 s   3.1 s   0.0 MB
+#   10k     0.4 s   2.5 s   3.2 MB (4.1 MB)
+#   70k     1.1 s   3.7 s   22 MB (30 MB)
+#   100k    1.4 s   3.0 s   32 MB (40 MB)
+#   200k    3.2 s   5.2 s   64 MB (79 MB)
+#   500k    7.8 s   8.1 s   160 MB (220 MB)
+# The driver path stays ahead to ~500k pairs, but the bound is set by
+# driver memory: ~330 B of Python objects per collected pair.
+CC_LOCAL_MAX_PAIRS = 100_000
+
+
+def _local_components(pairs) -> tuple[list, list]:
+    """Union-find over collected (a, b) pairs: path halving, and the
+    smaller root always becomes the parent, so every root is its
+    component's min id. Returns (ids, their roots). A null id is a node
+    of its own that links nothing — the same labelling the star path
+    gives it."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    ids = list(parent)
+    return ids, [find(x) for x in ids]
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 15,
+    max_iter: int = 30,
 ) -> DataFrame:
     """Connected components over near-dup candidate pairs:
     (id, cluster_id) where cluster_id is the MIN id in the component.
 
-    Min-label propagation: every node starts labelled with its own id;
-    each round a node takes the min of its label and its neighbours'
-    labels. Rounds needed = component diameter — near-dup clusters are
-    short chains/cliques in practice, and ``max_iter`` caps
-    pathological inputs (the loop also stops as soon as a round
-    changes nothing).
+    Every id that appears in a pair gets one row; a self-pair (a, a)
+    yields (a, a), and a null id yields (null, null) and links nothing.
 
-    Scale shape: the edge list is shuffled on src once per round
-    (equi-join with the label table) plus a map-side-combined min
-    aggregate — no driver-side graph. Labels are persisted per round
-    and the previous round unpersisted, cutting RECOMPUTE lineage so
-    round k does not re-execute rounds 1..k-1; every
-    ``checkpoint_every`` rounds the label table is additionally
-    localCheckpoint-ed, truncating the LOGICAL plan too (persist alone
-    leaves the nested plan growing, so Catalyst re-analysis turns
-    quadratic on high-diameter graphs). Convergence is detected with a
-    1-row sum aggregate (labels only ever decrease, so an unchanged
-    sum is a fixpoint).
+    The pair list is materialized once (lazy localCheckpoint) and
+    counted; the count picks the path:
 
-    The returned label table is localCheckpoint-materialized and every
-    loop cache is released before returning — a catalog sweep leaves
-    no cache-manager entries behind (checkpoint blocks are freed by
-    the ContextCleaner once the result is garbage-collected).
+    - at most ``CC_LOCAL_MAX_PAIRS`` pairs: the pairs are collected and
+      labelled by a union-find on the driver (one count and one
+      collect, whatever the diameter);
+    - more: alternating large-star/small-star contraction (Kiveris et
+      al., "Connected Components in MapReduce and Beyond", SoCC'14) as
+      DataFrame groupBy/join rounds — O(log n) rounds on any graph
+      shape, no driver-side graph. It raises ``RuntimeError`` when it
+      has not converged within ``max_iter`` rounds instead of returning
+      a partial labelling.
+
+    The result holds no cache-manager entry (checkpoint blocks are
+    freed by the ContextCleaner once the result is garbage-collected).
     """
-    checkpoint_every = 5
     _require_numeric_ids(pairs, id_a, id_b)
-    # materialize the pair list ONCE before the symmetrizing union:
-    # both union legs reference the pair plan, so materializing the
-    # union re-runs every post-exchange stage of the upstream pipeline
-    # (windows, candidate join, exact verify for the ngram form) a
-    # second time — ReuseExchange dedupes only the exchanges, not the
-    # reduce-side work above them (r11; same materialize-once shape as
-    # connected_components_alternating). Lazy checkpoint: the sizing
+    # materialize the pair list ONCE: the star path reads it for node
+    # extraction, sizing and round 0, and would otherwise re-run every
+    # post-exchange stage of the upstream pair plan (windows, candidate
+    # join, exact verify) for each of them. Lazy checkpoint: the sizing
     # count below is the action that runs the pair plan.
     e = pairs.select(
         F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
     ).localCheckpoint(eager=False)
-    # DataFrame.union is UNION ALL, so the symmetrized edge count is
-    # exactly twice the pair count — no second count job needed
-    n_edges = 2 * e.count()
-    edges0 = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    # size the iteration to the graph, not the session default: near-dup
-    # edge lists are a tiny fraction of the corpus, and a handful of
-    # rows spread over 32+ shuffle partitions makes every round pay
-    # dozens of empty-task overheads. Partitioning edges by dst ONCE
-    # also pre-aligns the per-round join so only the (small) label
-    # table shuffles each round.
-    sc = pairs.sparkSession.sparkContext
-    nparts = max(1, min(sc.defaultParallelism, n_edges // 100_000 + 1))
-    edges = edges0.repartition(nparts, "dst").persist()
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct()
-        .repartition(nparts, "id")
-        .withColumn("label", F.col("id"))
-        .persist()
-    )
-    # decimal(38) sum: labels are raw long ids (xxhash64-derived ids
-    # reach ~2^62) and an int64 sum overflows — ANSI mode would abort
-    # the job, non-ANSI could wrap to a FALSE fixpoint. Decimal is
-    # exact, and labels only decrease, so equal sums ⇔ converged.
-    _lsum = F.sum(F.col("label").cast("decimal(38,0)"))
-    prev_sum = labels.agg(_lsum).collect()[0][0]
-    # (the lazy-checkpointed pair blocks are freed by the
-    # ContextCleaner once `e` goes out of scope at return)
-    for i in range(max_iter):
-        nmin = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = labels.join(nmin, labels.id == nmin.src, "left").select(
-            "id",
-            F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
-        )
-        if (i + 1) % checkpoint_every == 0:
-            # truncate the logical plan: round k's plan otherwise nests
-            # every previous round and analysis time grows quadratically
-            new_labels = new_labels.localCheckpoint(eager=True)
-            cur_sum = new_labels.agg(_lsum).collect()[0][0]
-        else:
-            new_labels = new_labels.persist()
-            cur_sum = new_labels.agg(_lsum).collect()[0][0]
-        labels.unpersist()  # no-op on checkpointed rounds (not cached)
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    out = labels.select(F.col("id"), F.col("label").alias("cluster_id"))
-    out = out.localCheckpoint(eager=True)
-    labels.unpersist()
-    return out
+    n_pairs = e.count()
+    if n_pairs <= CC_LOCAL_MAX_PAIRS:
+        import pyarrow as pa
+
+        ids, roots = _local_components(e.collect())
+        # from an Arrow table, not a row list: that plans as a
+        # LocalRelation of known size, so a join against the labels
+        # broadcasts them instead of shuffling the other side, and no
+        # action re-runs a Python worker to unpickle the rows
+        table = pa.table({"id": pa.array(ids, pa.int64()),
+                          "cluster_id": pa.array(roots, pa.int64())})
+        return pairs.sparkSession.createDataFrame(table, "id long, cluster_id long")
+    return _star_components(e, n_pairs, max_iter)
 
 
 def near_dup_canonical(
@@ -847,7 +839,8 @@ def near_dup_canonical(
     member) plus every unclustered document — the final step of a
     training-data dedup pipeline (pairs from minhash/simhash/ngram/
     embedding candidates, grouped transitively by
-    connected_components).
+    connected_components — a driver union-find up to
+    ``CC_LOCAL_MAX_PAIRS`` pairs, star contraction above).
 
     The non-canonical member set is an anti-join key list — tiny
     relative to the corpus (only docs in some near-dup pair), so AQE
@@ -899,57 +892,33 @@ def _small_star(e: DataFrame) -> DataFrame:
     return _dedup_edges(relink.unionByName(self_link))
 
 
-def connected_components_alternating(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    contraction — O(log n) rounds on ANY graph shape, vs the
-    diameter-bound rounds of min-label propagation.
-
-    Use this when components can be long chains (linked record
-    timelines, web graphs); ``connected_components`` (propagation)
-    stays the default for near-dup clusters, whose diameter is small
-    and whose per-round cost is lighter (one join vs two star ops).
-    Published algorithm: Kiveris et al., "Connected Components in
-    MapReduce and Beyond" (SoCC'14) — implemented here as DataFrame
-    groupBy/join rounds, no driver-side graph.
+def _star_components(e: DataFrame, n_pairs: int, max_iter: int) -> DataFrame:
+    """The large-graph path of ``connected_components``: alternating
+    large-star/small-star rounds over the materialized pair list ``e``
+    (src, dst).
 
     Per round: two aggregate+join pairs over the (shrinking) edge
     list; fixpoint detected with an order-independent edge fingerprint
     (count + BIT_XOR of per-edge hashes — no sum overflow under ANSI).
-    Rounds persist and localCheckpoint alternately, so the logical
-    plan stays flat. Returns (id, cluster_id=min id of component),
-    the same contract as ``connected_components``.
-    """
-    _require_numeric_ids(pairs, id_a, id_b)
-    e0 = pairs.select(
-        F.col(id_a).cast("long").alias("src"),
-        F.col(id_b).cast("long").alias("dst"),
-    )
-    # materialize the deduped edge list ONCE (lazy checkpoint — the
-    # sizing count below is the action that runs the upstream pair
-    # plan). Node extraction, sizing, repartitioning, and round 0 all
-    # read the materialized blocks; before this, each of them
-    # re-executed the full candidate-pair pipeline (~3x the input
-    # cost at bench scale, arbitrarily worse above it).
-    edges = _dedup_edges(e0).localCheckpoint(eager=False)
-    sc = pairs.sparkSession.sparkContext
-    n_edges = edges.count()
-    nparts = max(1, min(sc.defaultParallelism, n_edges // 100_000 + 1))
-    edges = edges.repartition(nparts, "src").localCheckpoint(eager=False)
-    # lazy: reads the round-0 checkpoint when the final labelling join
-    # runs; holding the plan reference keeps those blocks alive
+    Each round is localCheckpoint-ed, so the logical plan stays flat."""
+    # size the rounds to the graph, not the session default: a near-dup
+    # edge list is a tiny fraction of the corpus, and a handful of rows
+    # spread over 32+ shuffle partitions makes every round pay dozens of
+    # empty-task overheads
+    sc = e.sparkSession.sparkContext
+    nparts = max(1, min(sc.defaultParallelism, n_pairs // 100_000 + 1))
+    edges = _dedup_edges(e).repartition(nparts, "src").localCheckpoint(eager=False)
+    # from the raw pairs, so self-pairs and null ids keep their row;
+    # lazy: reads the pair checkpoint when the final labelling join
+    # runs, and holding the plan reference keeps those blocks alive
     nodes = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
+        e.select(F.col("src").alias("id"))
+        .unionByName(e.select(F.col("dst").alias("id")))
         .distinct()
     )
 
-    def _fingerprint(e: DataFrame) -> tuple:
-        row = e.agg(
+    def _fingerprint(g: DataFrame) -> tuple:
+        row = g.agg(
             F.count(F.lit(1)).alias("n"),
             F.bit_xor(F.xxhash64("src", "dst")).alias("x"),
         ).collect()[0]
@@ -974,8 +943,8 @@ def connected_components_alternating(
         # CONVERGED star graph — silently extracting labels from a
         # partially contracted graph returns wrong cluster ids
         raise RuntimeError(
-            f"connected_components_alternating did not reach the edge-set "
-            f"fixpoint within max_iter={max_iter} rounds; raise max_iter "
+            f"connected_components did not reach the edge-set fixpoint "
+            f"within max_iter={max_iter} rounds; raise max_iter "
             f"(rounds needed grow O(log n) in the largest component)"
         )
     # converged star graph: every non-min node points at its component

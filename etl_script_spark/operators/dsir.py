@@ -90,7 +90,12 @@ def dsir_weights(
     marking the target-domain subset (target ⊂ raw, the standard DSIR
     setup). Returns (id_col, n_grams, weight_q) — weight_q is the
     1e-6-quantized integer sum; divide by 1e6 * n_grams for a mean
-    log-ratio. Documents with no grams produce no row."""
+    log-ratio. Documents with no grams produce no row.
+
+    ``df`` must be a scan-rooted plan (no join/aggregate/repartition
+    upstream): ``fan_out`` reads its partition count while the plan is
+    built, and on a plan with exchanges that runs the upstream shuffle
+    stages right then (see ``fan_out``'s cost note)."""
     # _fan_out: the gram explode (normalize + split + md5 per gram) is
     # the dominant CPU of both legs and otherwise runs at the SCAN's
     # width (a single small parquet file = 1 task; r11 — 2.5 s wall at

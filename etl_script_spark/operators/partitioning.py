@@ -11,7 +11,11 @@ is conditional on the input being narrower than the cluster.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
+
+_log = logging.getLogger(__name__)
 
 
 def fan_out(df: DataFrame, *by: Column | str) -> DataFrame:
@@ -56,10 +60,23 @@ def keyed_width(df: DataFrame) -> int:
     the same width every implicit exchange (join/groupBy) on that
     session already gets, so the empty-task overhead is bounded by
     what the session's own shuffles pay; the project session sizes
-    shuffle.partitions to the core count."""
+    shuffle.partitions to the core count.
+
+    A shuffle.partitions of ``'auto'`` (platforms that size shuffles
+    themselves) falls back to the cluster width and logs that it did;
+    any other non-integer value raises ``ValueError``."""
     sc = df.sparkSession.sparkContext
+    conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    if conf == "auto":
+        _log.warning(
+            "keyed_width: spark.sql.shuffle.partitions is 'auto'; "
+            "using defaultParallelism=%d", sc.defaultParallelism,
+        )
+        return sc.defaultParallelism
     try:
-        shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        shuffle = int(conf)
     except (TypeError, ValueError):
-        shuffle = sc.defaultParallelism
+        raise ValueError(
+            f"spark.sql.shuffle.partitions must be an integer or 'auto', got {conf!r}"
+        ) from None
     return max(sc.defaultParallelism, shuffle)

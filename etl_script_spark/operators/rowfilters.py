@@ -123,6 +123,17 @@ def strict_mode_filter(
     )
 
 
+def first_failed_rule(rules: dict[str, Column]) -> Column:
+    """The name of the FIRST rule in ``rules`` (reason-name → predicate
+    that must hold) that a row fails, or NULL when it passes them all;
+    a NULL predicate counts as failed."""
+    reason = F.lit(None).cast("string")
+    # build reversed so the first rule listed wins
+    for name, pred in reversed(list(rules.items())):
+        reason = F.when(~F.coalesce(pred, F.lit(False)), F.lit(name)).otherwise(reason)
+    return reason
+
+
 def validation_split(
     df: DataFrame, rules: dict[str, Column]
 ) -> tuple[DataFrame, DataFrame]:
@@ -133,11 +144,7 @@ def validation_split(
     taxonomy). Both sides derive from one projection — Catalyst reuses
     the scan. Ref: ImportInvoiceReport.php:169-190,261-291.
     """
-    reason = F.lit(None).cast("string")
-    # build reversed so the first rule listed wins
-    for name, pred in reversed(list(rules.items())):
-        reason = F.when(~F.coalesce(pred, F.lit(False)), F.lit(name)).otherwise(reason)
-    tagged = df.withColumn("__fail_reason", reason)
+    tagged = df.withColumn("__fail_reason", first_failed_rule(rules))
     valid = tagged.filter(F.col("__fail_reason").isNull()).drop("__fail_reason")
     invalid = tagged.filter(F.col("__fail_reason").isNotNull()).withColumnRenamed(
         "__fail_reason", "fail_reason"

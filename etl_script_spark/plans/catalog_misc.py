@@ -972,9 +972,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-out-regular graph derived from supplier keys. Ranks propagate
     in integer nano-units with floor-division contributions, so the
     unrolled recursive SQL oracle replays the arithmetic bit-for-bit
-    — the iterative-graph counterpart of the alternating-CC op, same
-    lazy-localCheckpoint per-round discipline, no driver-side
-    graph."""
+    — the iterative-graph counterpart of connected_components' star
+    path, same lazy-localCheckpoint per-round discipline, no
+    driver-side graph."""
     from etl_script_spark.operators import graph
 
     s = t(spark, sf_dir, "supplier").filter(F.col("s_suppkey") < 100).select(

@@ -126,8 +126,8 @@ _CC_CTES = f"""WITH RECURSIVE
 )
 def dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clusters: n-gram-Jaccard pairs grouped by
-    iterative min-label connected components (the oracle replays the
-    same closure with a recursive CTE)."""
+    connected components, labelled with the component's min id (the
+    oracle replays the same closure with a recursive CTE)."""
     d = t(spark, sf_dir, "documents")
     pairs = dedup_ops.ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.5)
     return dedup_ops.connected_components(pairs)
@@ -614,13 +614,14 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ("LLM-dedup",),
 )
 def dedup_cc_alternating(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same transitive-closure contract as dedup_cc_clusters, computed
-    with the alternating large-star/small-star contraction — O(log n)
-    rounds regardless of component diameter (the propagation operator
-    needs diameter rounds). The scale path for long-chain graphs."""
+    """Same transitive-closure contract and the same operator as
+    dedup_cc_clusters; the name is kept for its bench history. Pair
+    lists above ``dedup.CC_LOCAL_MAX_PAIRS`` run the alternating
+    large-star/small-star contraction — O(log n) rounds regardless of
+    component diameter; smaller ones a driver union-find."""
     d = t(spark, sf_dir, "documents")
     pairs = dedup_ops.ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.5)
-    return dedup_ops.connected_components_alternating(pairs)
+    return dedup_ops.connected_components(pairs)
 
 
 _CHAR_SHINGLES = (
@@ -1255,15 +1256,15 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup cluster keep the HIGHEST-quality member (tie -> min id),
     not the first-seen — the curation policy when near-dups differ in
     extraction quality (C4 keeps first; RefinedWeb-style pipelines
-    keep best). Composition: n-gram Jaccard pairs -> alternating-star
-    CC -> one window over (cluster, quality). The quality score is
+    keep best). Composition: n-gram Jaccard pairs -> connected
+    components -> one window over (cluster, quality). The quality score is
     the same oracle-green expression as text_quality_score, so the
     cross-engine double compares exactly. Scale shape: inherits the
     pair/CC analysis; the selection adds one window shuffle keyed on
     cluster_id."""
     d = t(spark, sf_dir, "documents")
     pairs = dedup_ops.ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.5)
-    cc = dedup_ops.connected_components_alternating(pairs)
+    cc = dedup_ops.connected_components(pairs)
     q = d.select(
         "doc_id", textstats.quality_score(F.col("text")).alias("quality")
     )

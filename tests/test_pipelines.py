@@ -139,6 +139,25 @@ def test_invoice_pipeline_clean_and_metrics(spark):
     assert table.count() == 2       # 1 existing + 1 new
 
 
+def test_invoice_import_counts_in_two_actions(spark):
+    """The import metrics cost two actions, not one per metric: the
+    tally aggregate (2 jobs under AQE: its shuffle stage and the
+    result) and the insert count (5 jobs: the keep-first aggregate,
+    the anti-join and the count). Four separate counts ran 11."""
+    cleaned = invoice_report.clean_invoice_records(_raw_invoices(spark))
+    existing = spark.createDataFrame([("IV100",)], ["invoice_no"])
+    sc = spark.sparkContext
+    group = "invoice-import-counts"
+    sc.setJobGroup(group, "import_invoices metrics")
+    try:
+        _, _, m = invoice_report.import_invoices(existing, cleaned)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    assert m == {"total": 4, "inserted": 1, "failed_validation": 1,
+                 "fixed_dates": 1, "failed_duplicate": 2}
+
+
 # --------------------------------------------------------- remittance
 
 def _rm_pages(spark):

@@ -164,33 +164,78 @@ def test_table_records_structural(spark, grid):
     assert set(got) == set(expected)
 
 
-EDGE_IDS = st.integers(min_value=0, max_value=80)
+def _bfs_component_labels(edges) -> set[tuple[int, int]]:
+    """Reference: components by BFS over the adjacency lists, each node
+    labelled with its component's min id."""
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out: set[tuple[int, int]] = set()
+    seen: set[int] = set()
+    for start in adj:
+        if start in seen:
+            continue
+        comp, todo = [], [start]
+        seen.add(start)
+        while todo:
+            x = todo.pop()
+            comp.append(x)
+            for y in adj[x] - seen:
+                seen.add(y)
+                todo.append(y)
+        out |= {(x, min(comp)) for x in comp}
+    return out
 
 
-@settings(max_examples=1, deadline=None)
-@given(st.lists(st.tuples(EDGE_IDS, EDGE_IDS), min_size=5, max_size=60))
-def test_cc_algorithms_agree(spark, edge_list):
-    """For ANY random undirected edge list, alternating star
-    contraction and min-label propagation must produce the same
-    (id → component-min) labelling."""
-    from etl_script_spark.operators.dedup import (
-        connected_components,
-        connected_components_alternating,
-    )
+# one component: (shape, node count); chains reach depth 50
+CC_COMPONENT = st.one_of(
+    st.tuples(st.just("star"), st.integers(min_value=2, max_value=12)),
+    st.tuples(st.just("chain"), st.integers(min_value=2, max_value=51)),
+    st.tuples(st.just("clique"), st.integers(min_value=2, max_value=7)),
+)
 
-    edges = [(a, b) for a, b in edge_list if a != b]
-    if not edges:
-        return
+
+@settings(max_examples=2, deadline=None)
+@given(
+    st.lists(CC_COMPONENT, min_size=1, max_size=6),
+    st.sampled_from([0, 2**62 - 1000, 2**62]),
+    st.randoms(use_true_random=False),
+)
+def test_cc_algorithms_agree(spark, components, base, rnd):
+    """For ANY mix of stars, chains and cliques (ids shuffled, near
+    2^62 or not, pairs in random order and orientation), both
+    connected_components paths give the BFS reference's
+    (id -> component-min) labelling — with CC_LOCAL_MAX_PAIRS at 0, at
+    a large value, exactly at the pair count and one pair below it."""
+    from unittest import mock
+
+    from etl_script_spark.operators import dedup
+
+    edges, next_id = [], base
+    for shape, k in components:
+        ids = list(range(next_id, next_id + k))
+        next_id += k
+        rnd.shuffle(ids)
+        if shape == "star":
+            edges += [(ids[0], x) for x in ids[1:]]
+        elif shape == "chain":
+            edges += list(zip(ids, ids[1:]))
+        else:
+            edges += [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]]
+    edges = [(b, a) if rnd.random() < 0.5 else (a, b) for a, b in edges]
+    rnd.shuffle(edges)
+    want = _bfs_component_labels(edges)
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    a = {
-        (r["id"], r["cluster_id"])
-        for r in connected_components_alternating(pairs).collect()
-    }
-    b = {
-        (r["id"], r["cluster_id"])
-        for r in connected_components(pairs, max_iter=90).collect()
-    }
-    assert a == b
+    n = len(edges)
+    real_local = dedup._local_components
+    for bound, local in ((0, False), (10**9, True), (n, True), (n - 1, False)):
+        with mock.patch.object(dedup, "CC_LOCAL_MAX_PAIRS", bound), \
+                mock.patch.object(dedup, "_local_components",
+                                  side_effect=real_local) as spy:
+            got = {tuple(r) for r in dedup.connected_components(pairs).collect()}
+        assert spy.called == local, (bound, n)
+        assert got == want, (bound, n)
 
 
 TOKENS = st.text(

@@ -124,3 +124,41 @@ def test_containment_pairs_lazy_when_not_eager(spark):
         "contained_id", "container_id", "n_grams_a", "n_common",
         "containment_ppm",
     ]
+
+
+# ---------------------------------------------------------------------------
+# keyed_width on a non-numeric spark.sql.shuffle.partitions
+# (operators/partitioning.py)
+# ---------------------------------------------------------------------------
+
+
+def _frame_with_shuffle_conf(value):
+    """Stand-in DataFrame: stock Spark refuses a non-integer
+    shuffle.partitions, so the conf value is served by a stub."""
+    from types import SimpleNamespace
+
+    session = SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=4),
+        conf=SimpleNamespace(get=lambda key: value),
+    )
+    return SimpleNamespace(sparkSession=session)
+
+
+def test_keyed_width_auto_shuffle_partitions_logs_fallback(caplog):
+    import logging
+
+    from etl_script_spark.operators.partitioning import keyed_width
+
+    with caplog.at_level(logging.WARNING, "etl_script_spark.operators.partitioning"):
+        assert keyed_width(_frame_with_shuffle_conf("auto")) == 4
+    assert "'auto'" in caplog.text
+    assert keyed_width(_frame_with_shuffle_conf("16")) == 16
+
+
+def test_keyed_width_rejects_non_numeric_shuffle_partitions():
+    import pytest
+
+    from etl_script_spark.operators.partitioning import keyed_width
+
+    with pytest.raises(ValueError, match="integer or 'auto'"):
+        keyed_width(_frame_with_shuffle_conf("lots"))

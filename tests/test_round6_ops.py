@@ -165,13 +165,13 @@ def test_minhash_identity_collapse_preserves_clusters(spark):
     # identical connected components
     cc_star = {
         (r["id"], r["cluster_id"])
-        for r in dd.connected_components_alternating(
+        for r in dd.connected_components(
             star.select("id_a", "id_b"), "id_a", "id_b"
         ).collect()
     }
     cc_full = {
         (r["id"], r["cluster_id"])
-        for r in dd.connected_components_alternating(
+        for r in dd.connected_components(
             full.select("id_a", "id_b"), "id_a", "id_b"
         ).collect()
     }
@@ -242,6 +242,26 @@ def test_dsir_empty_docs_produce_no_rows(spark):
     assert {r.doc_id for r in got} == {1}
     # unigrams (2) + bigram (1)
     assert got[0].n_grams == 3
+
+
+def test_dsir_weights_scan_rooted_input_runs_no_job_while_built(spark, tmp_path):
+    """The documented input contract: on a scan-rooted plan, building
+    dsir_weights (fan_out's partition-count read included) submits no
+    Spark job; only the action does."""
+    from etl_script_spark.operators import dsir
+
+    _dsir_corpus(spark).write.parquet(str(tmp_path / "docs"))
+    d = spark.read.parquet(str(tmp_path / "docs"))
+    sc = spark.sparkContext
+    group = "dsir-scan-rooted-build"
+    sc.setJobGroup(group, "dsir_weights plan construction")
+    try:
+        w = dsir.dsir_weights(d, "doc_id", "text", F.col("is_t"), n_buckets=512)
+        built = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert w.count() > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert built == []
 
 
 def test_dsir_validation():

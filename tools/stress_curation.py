@@ -110,7 +110,7 @@ def main():
     # both candidate generation and CC contraction
     t0 = time.time()
     pairs = dedup_ops.minhash_lsh_candidates(d, "doc_id", "text")
-    cc = dedup_ops.connected_components_alternating(
+    cc = dedup_ops.connected_components(
         pairs.select("id_a", "id_b"), "id_a", "id_b"
     )
     n, k = cc.count(), cc.select("cluster_id").distinct().count()
@@ -416,7 +416,7 @@ def stress_round6_decade(spark):
     t0 = time.time()
     good = pairs.filter(F.col("est_jaccard") >= 0.7)
     ng = good.count()
-    cc = dedup_ops.connected_components_alternating(
+    cc = dedup_ops.connected_components(
         good.select("id_a", "id_b"), "id_a", "id_b"
     )
     n, k = cc.count(), cc.select("cluster_id").distinct().count()
