@@ -21,6 +21,23 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Driver heap ceiling when SPARK_GRAFT_DRIVER_MEM is unset: 48 GB, the
+# local[32] posture, but never more than half of physical memory. G1
+# sizes its growth steps from the uncommitted part of the ceiling, so a
+# 48 GB ceiling on a 16 GB host, after a run of busy young collections,
+# asked the OS for ~16 GB in one commit; without swap that fails and the
+# JVM aborts, taking every later Spark call of the process with it.
+MAX_DEFAULT_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` to use when the env does not set one."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+    except (ValueError, OSError, AttributeError):
+        return f"{MAX_DEFAULT_DRIVER_MEM_MB}m"
+    return f"{max(1024, min(MAX_DEFAULT_DRIVER_MEM_MB, phys_mb // 2))}m"
+
 
 def get_spark(
     app_name: str = "etl-script-spark",
@@ -44,7 +61,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the generated-class cache defaults to 100 entries; a session

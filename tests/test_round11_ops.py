@@ -162,3 +162,29 @@ def test_keyed_width_rejects_non_numeric_shuffle_partitions():
 
     with pytest.raises(ValueError, match="integer or 'auto'"):
         keyed_width(_frame_with_shuffle_conf("lots"))
+
+
+# ---------------------------------------------------------------------------
+# session default driver heap (session.py)
+# ---------------------------------------------------------------------------
+
+
+def test_default_driver_memory_capped_at_half_of_physical(monkeypatch):
+    import os
+
+    from etl_script_spark import session
+
+    pages = {"SC_PAGE_SIZE": 4096}
+
+    def fake_sysconf(name):
+        if name not in pages:
+            raise ValueError(f"unrecognized configuration name {name}")
+        return pages[name]
+
+    monkeypatch.setattr(os, "sysconf", fake_sysconf)
+    pages["SC_PHYS_PAGES"] = 16 * 1024 * 1024 * 1024 // 4096
+    assert session.default_driver_memory() == "8192m"
+    pages["SC_PHYS_PAGES"] = 256 * 1024 * 1024 * 1024 // 4096
+    assert session.default_driver_memory() == "49152m"
+    del pages["SC_PHYS_PAGES"]
+    assert session.default_driver_memory() == "49152m"
