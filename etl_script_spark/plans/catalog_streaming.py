@@ -575,21 +575,23 @@ _NDG_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 )
 def st_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming duplicate-ingest gate: the corpus is split into
-    an initial store (doc_id%4==0) and three epoch files streamed
-    with maxFilesPerTrigger=1; each micro-batch is deduped within
-    itself (keep min id per fingerprint) and anti-joined against the
-    accumulated fingerprint store, and survivors' fingerprints join
-    the store for the NEXT epoch. Cross-epoch duplicates are planted
-    (doc_id%10==1 copies the previous doc, which lives in the
-    previous epoch; doc_id%20==18 copies a same-epoch doc), so the
-    oracle — the whole chain unrolled as CTEs — proves the store
-    CHAINING, including drops caused by a previous epoch's ADMITTED
-    doc (not just the initial store). Exact-md5 mode; the simhash
-    banded mode of the same gate (hamming<=k vs the store via
-    pigeonhole bands) has no SQL-expressible truth and is covered by
-    planted-near-dup tests (tests/test_streaming.py). Store holds
-    fingerprints only — 16 bytes/doc at 100 TB, and the per-epoch
-    work is one hash anti-join."""
+    an initial store (doc_id%4==0) and three epoch files, which one
+    AvailableNow trigger drains as ONE micro-batch; per fingerprint the
+    gate keeps the first row in feed order (file mtime, path, id) and
+    anti-joins it against the fingerprint store. Cross-epoch
+    duplicates are planted (doc_id%10==1 copies the previous doc,
+    which lives in the previous epoch; doc_id%20==18 copies a
+    same-epoch doc), so the oracle — the epoch-by-epoch chain unrolled
+    as CTEs — proves that ranking by file order equals chaining the
+    store through the epochs, including drops caused by an earlier
+    epoch's ADMITTED doc (not just the initial store). Chaining the
+    store across real triggers (one file per micro-batch) is pinned by
+    tests/test_streaming.py::test_neardup_gate_exact_result_independent_of_batching.
+    Exact-md5 mode; the simhash banded mode of the same gate (hamming<=k
+    vs the store via pigeonhole bands) has no SQL-expressible truth and
+    is covered by planted-near-dup tests (tests/test_streaming.py).
+    Store holds fingerprints only — 16 bytes/doc at 100 TB, and the
+    per-batch work is one aggregate and one hash anti-join."""
     from etl_script_spark.streaming import neardup
 
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -750,17 +752,18 @@ def st_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st_stream_quota_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming per-source token-quota gate
     (streaming/quota.py:stream_quota_gate): the corpus streams as
-    three epoch files (doc_id%3) with maxFilesPerTrigger=1; each
-    micro-batch admits a source's documents while the source's
-    cumulative token count — carried state plus the in-batch running
-    sum in ascending id order — stays within quota, and the state
-    advances by every token SEEN, so admission is a prefix of the
-    global (epoch, id) stream. That prefix contract is exactly why
-    the whole multi-epoch run unrolls to ONE window cumsum in the
-    oracle: state chaining across micro-batches must reproduce the
-    global cumulative sum or the hash breaks. State is one counter
-    per source; per-batch work is a window over the batch plus a
-    broadcast join against the counter table."""
+    three epoch files (doc_id%3), which one AvailableNow trigger drains
+    as ONE micro-batch; a source's documents are admitted while its
+    cumulative token count in feed order (file mtime, path, id) stays
+    within quota. State advances by every token SEEN, so admission is
+    a prefix of the global (epoch, id) stream and the whole run
+    unrolls to ONE window cumsum in the oracle. Chaining the
+    per-source counters across real triggers (one file per
+    micro-batch) is pinned by
+    tests/test_streaming.py::test_stream_quota_gate_result_independent_of_batching.
+    State is one counter per source and micro-batch; per-batch work is
+    a window over the batch plus a broadcast join against the
+    counters."""
     from etl_script_spark.streaming import quota
 
     d = t(spark, sf_dir, "documents").select("doc_id", "source", "text")

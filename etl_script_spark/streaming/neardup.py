@@ -7,19 +7,21 @@ store is fingerprints only (8–16 bytes/doc), never text, so the gate
 scales to a 100 TB-ingested corpus with a store that fits the same
 order as a dedup index. Per micro-batch:
 
-1. within-batch exact dedup (keep min id per fingerprint),
+1. within-batch exact dedup: one aggregate keeps, per fingerprint,
+   the first row in feed order (file mtime, file path, id),
 2. anti-match the batch against the store (mode-dependent, below),
-3. survivors' fingerprints are unioned into the store
-   (localCheckpoint bounds the lineage chain across epochs — same
-   discipline as the streaming CDC apply).
+3. ``localCheckpoint`` the admitted rows; their fingerprints, distinct
+   and new to the store, join it as one more leaf.
 
 Modes:
 
 - ``exact``: fingerprint = md5 of normalized text; match is hash
-  equality (one anti-join per batch). This mode is fully
-  SQL-expressible, so the catalog entry's DuckDB oracle replays the
-  whole epoch chain as unrolled CTEs — the green row proves the
-  cross-epoch store chaining, which is the part streaming adds.
+  equality (one anti-join). The admitted set — the first row in feed
+  order of every fingerprint the store does not hold — does not
+  depend on how files are grouped into micro-batches, so the whole
+  feed drains in ONE micro-batch. A null text has no fingerprint and
+  matches nothing: each file admits its first null-text row. The
+  catalog entry's DuckDB oracle replays the epoch chain as CTEs.
 - ``simhash``: fingerprint = 64-bit SimHash; match is "any store
   fingerprint within hamming <= k", found via the same
   pigeonhole-band equi-join as ``dedup.simhash_near_dups`` (a
@@ -29,10 +31,11 @@ Modes:
   properties instead of the oracle (house rule, same as
   dedup_simhash).
 
-Batch granularity caveat (deliberate): within one micro-batch only
-EXACT duplicates collapse; two near-but-not-identical documents in
-the same batch both survive (and both enter the store). A crawl gate
-that must near-dedup within the epoch runs the batch variant
+Batch granularity caveat (simhash only, deliberate): within one
+micro-batch only EXACT duplicates collapse; two near-but-not-identical
+documents in the same batch both survive (and both enter the store),
+so simhash mode reads one file per micro-batch. A crawl gate that
+must near-dedup within the epoch runs the batch variant
 (``simhash_near_dups``) on the epoch first; chaining the two is a
 composition, not a new operator.
 """
@@ -40,10 +43,13 @@ composition, not a new operator.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_script_spark.operators.dedup import simhash_fingerprints
@@ -54,9 +60,9 @@ __all__ = ["write_epoch_feed", "stream_neardup_gate"]
 
 def write_epoch_feed(batches: list[DataFrame], prefix: str = "ndg_feed") -> str:
     """Write each batch as one parquet directory with strictly
-    increasing mtimes so FileStreamSource (which orders by
-    modification time) delivers them as ordered micro-batches under
-    maxFilesPerTrigger=1. Returns the feed directory."""
+    increasing mtimes, so FileStreamSource (which orders by
+    modification time) and the gates' (mtime, path) ranking both see
+    the epochs in list order. Returns the feed directory."""
     feed_dir = tempfile.mkdtemp(prefix=f"{prefix}_{uuid.uuid4().hex[:6]}_")
     for i, b in enumerate(batches):
         path = os.path.join(feed_dir, f"epoch_{i + 1}")
@@ -65,6 +71,49 @@ def write_epoch_feed(batches: list[DataFrame], prefix: str = "ndg_feed") -> str:
             for f in files:
                 os.utime(os.path.join(root, f), (1_000_000 + i, 1_000_000 + i))
     return feed_dir
+
+
+def _drain_feed(
+    spark: SparkSession, tag: str, feed_dir: str, schema: str,
+    sink: Callable[[DataFrame], DataFrame], empty_schema: str,
+    timeout: float, files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Drain the parquet files under ``feed_dir`` through ``sink`` with
+    foreachBatch and one AvailableNow trigger, and return the union of
+    the frames ``sink`` returns (empty if it never ran). Each row
+    carries its file's ``__mtime`` and ``__path``, the feed order a
+    sink ranks by. ``files_per_trigger`` caps the files per
+    micro-batch; None reads the whole feed as one. The checkpoint
+    directory is removed on every exit, a timeout included."""
+    reader = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("recursiveFileLookup", "true")
+    )
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(files_per_trigger))
+    sdf = reader.parquet(feed_dir).select(
+        "*",
+        F.col("_metadata.file_modification_time").alias("__mtime"),
+        F.col("_metadata.file_path").alias("__path"),
+    )
+    out: list[DataFrame] = []
+    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{tag}_")
+    try:
+        q = (
+            sdf.writeStream.foreachBatch(lambda df, _id: out.append(sink(df)))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(timeout):
+            q.stop()
+            raise TimeoutError(f"{feed_dir}: stream did not finish in {timeout}s")
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    if not out:
+        return spark.createDataFrame([], empty_schema)
+    return reduce(DataFrame.unionByName, out)
 
 
 def _exact_fp(text_col: str) -> F.Column:
@@ -106,11 +155,11 @@ def stream_neardup_gate(
     timeout: int = 300,
 ) -> DataFrame:
     """Run the gate over an epoch feed (see ``write_epoch_feed``) with
-    AvailableNow, and return every ADMITTED document as
-    (id_col, fp) — exact mode fp is the md5 hex string, simhash mode
-    fp is the 64-bit fingerprint. ``store_init`` holds the
-    already-ingested corpus as (id_col, text_col) rows; only its
-    fingerprints are kept."""
+    AvailableNow and return every ADMITTED document as (id_col, fp).
+    Exact mode: fp is the md5 hex string, and the whole feed is one
+    micro-batch. Simhash mode: fp is the 64-bit fingerprint, and each
+    file is one micro-batch. ``store_init`` holds the already-ingested
+    corpus as (id_col, text_col) rows; only its fingerprints are kept."""
     if mode not in ("exact", "simhash"):
         raise ValueError(f"mode must be 'exact' or 'simhash', got {mode!r}")
     if mode == "simhash" and bands < max_hamming + 1:
@@ -126,75 +175,45 @@ def stream_neardup_gate(
             )
         return simhash_fingerprints(df, id_col, text_col)
 
-    # store state: fingerprints only, re-homed per epoch
-    state: list[DataFrame] = [
-        fingerprint(store_init).select("fp").distinct().localCheckpoint()
-    ]
-    admitted: list[DataFrame] = []
+    # the store: checkpointed fingerprint leaves, one per micro-batch
+    store = [fingerprint(store_init).select("fp").distinct().localCheckpoint()]
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        fps = fingerprint(batch_df)
-        w = Window.partitionBy("fp").orderBy("id")
-        first = (
-            fps.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+    def _sink(batch_df: DataFrame) -> DataFrame:
+        known = reduce(DataFrame.unionByName, store)
         if mode == "exact":
-            fresh = first.join(state[0], "fp", "left_anti")
-        else:
-            bb = _simhash_bands(first, bands)
-            sb = _simhash_bands(
-                state[0].select(F.lit(-1).alias("id"), "fp"), bands
+            rank = F.struct("__mtime", "__path", F.col(id_col).alias("id"))
+            fps = batch_df.select(
+                _exact_fp(text_col).alias("fp"), "__path", rank.alias("r"))
+            # a null fingerprint keys nothing: null texts group per file
+            null_file = F.when(F.col("fp").isNull(), F.col("__path"))
+            fresh = (
+                fps.groupBy("fp", null_file.alias("__null_file"))
+                .agg(F.min("r").alias("r"))
+                .select(F.col("r.id").alias("id"), "fp")
+                .join(known, "fp", "left_anti")
             )
+        else:
+            # one file per micro-batch, so feed order is id order
+            first = fingerprint(batch_df).groupBy("fp").agg(F.min("id").alias("id"))
+            bb = _simhash_bands(first, bands)
+            sb = _simhash_bands(known.select(F.lit(-1).alias("id"), "fp"), bands)
+            sb = sb.select("band", "val", F.col("fp").alias("sfp"))
             hits = (
                 bb.hint("shuffle_hash")
-                .join(
-                    sb.select("band", "val", F.col("fp").alias("sfp")),
-                    ["band", "val"],
-                )
-                .filter(
-                    F.bit_count(F.col("fp").bitwiseXOR(F.col("sfp")))
-                    <= max_hamming
-                )
+                .join(sb, ["band", "val"])
+                .filter(F.bit_count(F.col("fp").bitwiseXOR(F.col("sfp"))) <= max_hamming)
                 .select("id")
                 .distinct()
             )
             fresh = first.join(hits, "id", "left_anti")
         fresh = fresh.localCheckpoint()
-        admitted.append(fresh)
-        state[0] = (
-            state[0].unionByName(fresh.select("fp")).distinct().localCheckpoint()
-        )
+        store.append(fresh.select("fp"))
+        return fresh
 
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(feed_dir)
-    )
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_ndg_{uuid.uuid4().hex[:6]}_")
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"stream_neardup_gate: stream did not finish in {timeout}s"
-        )
-    if not admitted:
-        # the fallback schema must agree with the non-empty case:
-        # exact mode carries fp as the md5 hex STRING, simhash mode as
-        # the 64-bit BIGINT fingerprint
-        fp_type = "string" if mode == "exact" else "bigint"
-        return spark.createDataFrame([], f"id long, fp {fp_type}").select(
-            F.col("id").alias(id_col), "fp"
-        )
-    out = admitted[0]
-    for a in admitted[1:]:
-        out = out.unionByName(a)
+    # the empty feed's schema must agree with the non-empty case: exact
+    # mode carries fp as the md5 hex STRING, simhash mode as the
+    # 64-bit BIGINT fingerprint
+    empty = f"id long, fp {'string' if mode == 'exact' else 'bigint'}"
+    out = _drain_feed(spark, "ndg", feed_dir, schema, _sink, empty, timeout,
+                      files_per_trigger=None if mode == "exact" else 1)
     return out.select(F.col("id").alias(id_col), "fp")

@@ -9,22 +9,25 @@ a full-corpus recount per batch. The batch analogue is
 the consumed-token counter as the only carried state (one row per
 source — bytes of state per source, unbounded stream).
 
-Admission contract (deterministic, engine-replayable): within every
-micro-batch, a source's documents are considered in ascending id
-order; a document is admitted iff the source's cumulative token count
-THROUGH THIS DOCUMENT (state + in-batch running sum, the document's
-own tokens included) stays <= quota. Cumulative sums are monotone, so
-admission per source is a PREFIX of the ordered stream — once one
-document overflows, everything later from that source is rejected,
-which makes the whole multi-epoch run replayable as one window
-cumsum over (epoch, id) per source: exactly the SQL any engine can
-run, and the driver oracle does.
+Admission contract (deterministic, engine-replayable): a source's
+documents are considered in feed order — file mtime, then file path,
+then id; a document is admitted iff the source's cumulative token
+count THROUGH THIS DOCUMENT (the document's own tokens included)
+stays <= quota. Cumulative sums are monotone, so admission per source
+is a PREFIX of the ordered stream — once one document overflows,
+everything later from that source is rejected, which makes the whole
+multi-epoch run replayable as one window cumsum over (epoch, id) per
+source: exactly the SQL any engine can run, and the driver oracle
+does. Because of that, the result does not depend on how files are
+grouped into micro-batches, and one trigger drains the whole feed in
+one micro-batch.
 
-Shape: per batch, one window cumsum partitioned by source (the same
-shuffle any per-source aggregation pays) + a broadcast-sized join
-against the per-source state table; state updates are one aggregation
-of the admitted rows. foreachBatch + AvailableNow, same harness as
-``streaming.neardup``.
+Shape: per micro-batch, one window cumsum partitioned by source (the
+same shuffle any per-source aggregation pays) plus a broadcast join
+against the per-source state table. The next state is checkpointed
+lazily, so a feed that fits one micro-batch never computes it. The
+feed harness is ``streaming.neardup._drain_feed``, shared with the
+near-duplicate gate.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_script_spark.operators.textstats import words
+from etl_script_spark.streaming.neardup import _drain_feed
 from etl_script_spark.streaming.neardup import write_epoch_feed  # noqa: F401
 
 
@@ -53,20 +57,16 @@ def stream_quota_gate(
 
     ``quota_tokens`` applies independently to every source value.
     """
-    import tempfile
-    import uuid
-
     if quota_tokens < 1:
         raise ValueError(f"quota_tokens must be >= 1, got {quota_tokens}")
 
     # state: (source, used) — one row per source, tiny by construction
-    state: list[DataFrame] = [
-        spark.createDataFrame([], "source string, used long").localCheckpoint()
-    ]
-    admitted: list[DataFrame] = []
+    state = [spark.createDataFrame([], "source string, used long")]
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _sink(batch_df: DataFrame) -> DataFrame:
         toks = batch_df.select(
+            "__mtime",
+            "__path",
             F.col(id_col).alias("id"),
             F.col(source_col).alias("source"),
             F.size(
@@ -75,68 +75,34 @@ def stream_quota_gate(
         )
         w = (
             Window.partitionBy("source")
-            .orderBy("id")
+            .orderBy("__mtime", "__path", "id")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        cum = toks.withColumn("__cum_batch", F.sum("n_tok").over(w))
-        joined = cum.join(F.broadcast(state[0]), "source", "left").withColumn(
-            "cum_tok",
-            F.coalesce(F.col("used"), F.lit(0)) + F.col("__cum_batch"),
-        )
-        fresh = (
-            joined.filter(F.col("cum_tok") <= quota_tokens)
-            .select("id", "source", "n_tok", "cum_tok")
+        joined = (
+            toks.withColumn("__cum_batch", F.sum("n_tok").over(w))
+            .join(F.broadcast(state[0]), "source", "left")
+            .select(
+                "id",
+                "source",
+                "n_tok",
+                (F.coalesce(F.col("used"), F.lit(0)) + F.col("__cum_batch"))
+                .alias("cum_tok"),
+            )
             .localCheckpoint()
         )
-        admitted.append(fresh)
         # state advances by EVERY token seen (admitted or not): the
         # admission predicate is then exactly "global cumsum through
         # this doc <= quota", which one window cumsum over the whole
         # feed replays — advancing only by admitted tokens would
         # re-open the budget after an overflow and break the prefix
         # contract (and the oracle)
-        delta = joined.groupBy("source").agg(
-            F.max("cum_tok").alias("__new")
-        )
+        new = joined.groupBy("source").agg(F.max("cum_tok").alias("used"))
         state[0] = (
-            state[0]
-            .join(delta, "source", "full_outer")
-            .select(
-                "source",
-                F.greatest(
-                    F.coalesce(F.col("used"), F.lit(0)),
-                    F.coalesce(F.col("__new"), F.lit(0)),
-                ).alias("used"),
-            )
-            .localCheckpoint()
+            state[0].join(new, "source", "left_anti").unionByName(new)
+            .localCheckpoint(eager=False)
         )
+        return joined.filter(F.col("cum_tok") <= quota_tokens)
 
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(feed_dir)
-    )
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_qg_{uuid.uuid4().hex[:6]}_")
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"stream_quota_gate: stream did not finish in {timeout}s"
-        )
-    if not admitted:
-        return spark.createDataFrame(
-            [], "id long, source string, n_tok long, cum_tok long"
-        ).select(F.col("id").alias(id_col), "source", "n_tok", "cum_tok")
-    out = admitted[0]
-    for a in admitted[1:]:
-        out = out.unionByName(a)
-    return out.select(
-        F.col("id").alias(id_col), "source", "n_tok", "cum_tok"
-    )
+    out = _drain_feed(spark, "qg", feed_dir, schema, _sink,
+                      "id long, source string, n_tok long, cum_tok long", timeout)
+    return out.select(F.col("id").alias(id_col), "source", "n_tok", "cum_tok")

@@ -351,6 +351,158 @@ def test_neardup_gate_empty_feed_schema_matches_mode(spark):
         assert got == want, f"mode={mode}: fp dtype {got}, want {want}"
 
 
+def _spy_drain_feed(monkeypatch, module, **force):
+    """Wrap ``module._drain_feed``: record the files_per_trigger each
+    call asks for and count the micro-batches its sink sees. With
+    ``files_per_trigger=n`` given, every call runs with that value."""
+    real = module._drain_feed
+    seen = {"asked": [], "batches": 0}
+
+    def wrapper(*args, files_per_trigger=None):
+        seen["asked"].append(files_per_trigger)
+        *head, sink, empty_schema, timeout = args
+
+        def counting_sink(df):
+            seen["batches"] += 1
+            return sink(df)
+
+        fpt = force.get("files_per_trigger", files_per_trigger)
+        return real(*head, counting_sink, empty_schema, timeout,
+                    files_per_trigger=fpt)
+
+    monkeypatch.setattr(module, "_drain_feed", wrapper)
+    return seen
+
+
+def _gate_feed(spark, rows_by_epoch, schema):
+    from etl_script_spark.streaming import neardup
+
+    return neardup.write_epoch_feed(
+        [spark.createDataFrame(rows, schema) for rows in rows_by_epoch],
+        prefix="gate_batching",
+    )
+
+
+def test_neardup_gate_exact_result_independent_of_batching(spark, monkeypatch):
+    """Exact mode admits the first row in feed order (file mtime, path,
+    id) of every fingerprint the store lacks, so one micro-batch per
+    file and one for the whole feed give the same rows. The per-file
+    run also chains the store across four triggers."""
+    from etl_script_spark.streaming import neardup
+
+    schema = "doc_id long, text string"
+    store = spark.createDataFrame([(1, "Stored  doc")], schema)
+    epochs = [
+        # in-file duplicates with ids out of order; two null texts
+        [(15, "dup a"), (12, "DUP a"), (14, "dup  a"), (30, "order text"),
+         (17, None), (16, None), (40, "stored doc")],
+        # cross-epoch repeat; a later copy with a SMALLER id than the
+        # earlier one (file order wins); one null text
+        [(20, "dup a"), (3, "order text"), (25, None), (50, "fresh two")],
+        [],  # an empty epoch
+        [(60, "fresh two"), (2, "stored doc"), (61, "fresh four")],
+    ]
+    feed = _gate_feed(spark, epochs, schema)
+
+    def run(fpt):
+        with monkeypatch.context() as m:
+            seen = _spy_drain_feed(m, neardup, files_per_trigger=fpt)
+            out = neardup.stream_neardup_gate(spark, feed, schema, store)
+            rows = sorted(tuple(r) for r in out.collect())
+        return rows, seen["batches"]
+
+    per_file, n_per_file = run(1)
+    one, n_one = run(None)
+    assert n_per_file == 4 and n_one == 1
+    assert one == per_file
+    # each file keeps its first null-text row: 16 (epoch 1), 25 (epoch 2)
+    assert [r[0] for r in one] == [12, 16, 25, 30, 50, 61]
+
+
+def test_stream_quota_gate_result_independent_of_batching(spark, monkeypatch):
+    """The quota gate's state advances by every token seen, so admission
+    is a prefix of the feed order (file mtime, path, id) per source and
+    does not depend on micro-batch boundaries."""
+    from etl_script_spark.streaming import quota
+
+    schema = "doc_id long, source string, text string"
+    epochs = [
+        [(15, "a", "w w"), (12, "a", "w"), (14, "b", "w w w"),
+         (13, "a", None), (5, "c", "w w w")],
+        [(20, "a", "w w"), (3, "a", "w"), (4, "b", "w w"), (21, "b", "w")],
+        [],
+        # source c comes back after two micro-batches without it
+        [(2, "a", "w"), (1, "b", "w w w w w"), (6, "c", "w w w w")],
+    ]
+    feed = _gate_feed(spark, epochs, schema)
+
+    def run(fpt):
+        with monkeypatch.context() as m:
+            seen = _spy_drain_feed(m, quota, files_per_trigger=fpt)
+            out = quota.stream_quota_gate(spark, feed, schema, quota_tokens=6)
+            rows = sorted(tuple(r) for r in out.collect())
+        return rows, seen["batches"]
+
+    per_file, n_per_file = run(1)
+    one, n_one = run(None)
+    assert n_per_file == 4 and n_one == 1
+    assert one == per_file
+    # plain-Python replay: per source, cumsum in (epoch, id) order; a
+    # null text has no token count and adds nothing
+    want, cum = [], {}
+    for rows in epochs:
+        for doc_id, src, text in sorted(rows):
+            n = len(text.split()) if text is not None else None
+            cum[src] = cum.get(src, 0) + (n or 0)
+            if cum[src] <= 6:
+                want.append((doc_id, src, n, cum[src]))
+    assert one == sorted(want)
+
+
+def test_exact_gates_drain_feed_in_one_micro_batch(spark, monkeypatch):
+    from etl_script_spark.streaming import neardup, quota
+
+    rows = [[(i * 10 + j, "s", f"doc {i} {j}") for j in range(3)] for i in range(4)]
+    schema = "doc_id long, source string, text string"
+    feed = _gate_feed(spark, rows, schema)
+    store = spark.createDataFrame([], "doc_id long, text string")
+    nd = _spy_drain_feed(monkeypatch, neardup)
+    qg = _spy_drain_feed(monkeypatch, quota)
+    assert neardup.stream_neardup_gate(spark, feed, schema, store).count() == 12
+    assert quota.stream_quota_gate(spark, feed, schema, 100).count() == 12
+    assert (nd["asked"], nd["batches"]) == ([None], 1)
+    assert (qg["asked"], qg["batches"]) == ([None], 1)
+
+
+def test_gates_remove_their_checkpoint_dirs(spark, monkeypatch, tmp_path):
+    """Neither gate leaves a checkpoint directory behind, also when the
+    stream times out."""
+    import tempfile
+
+    import pytest
+
+    from etl_script_spark.streaming import neardup, quota
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    schema = "doc_id long, source string, text string"
+    feed = _gate_feed(spark, [[(1, "s", "a b")], [(2, "s", "c d")]], schema)
+    store = spark.createDataFrame([], "doc_id long, text string")
+
+    def leftovers():
+        return sorted(p.name for p in tmp_path.iterdir()
+                      if p.name.startswith(("ckpt_ndg_", "ckpt_qg_")))
+
+    for mode in ("exact", "simhash"):
+        neardup.stream_neardup_gate(spark, feed, schema, store, mode=mode).count()
+    quota.stream_quota_gate(spark, feed, schema, 10).count()
+    assert leftovers() == []
+    with pytest.raises(TimeoutError):
+        neardup.stream_neardup_gate(spark, feed, schema, store, timeout=0.001)
+    with pytest.raises(TimeoutError):
+        quota.stream_quota_gate(spark, feed, schema, 10, timeout=0.001)
+    assert leftovers() == []
+
+
 def test_adaptive_state_partitions_size_derivation(spark, tmp_path):
     """r10 optimization: state-partition count derives from input
     bytes (~1 per 512 KB), clamped to [2, defaultParallelism] — a tiny

@@ -864,8 +864,9 @@ def stress_round7_decade(spark):
 
     # 128-epoch gate: each epoch carries 1k fresh docs + 500 repeats
     # of an earlier epoch's text (cross-epoch near-dups the store must
-    # reject). Store state compounds across epochs - the shape under
-    # test is per-epoch cost as a function of accumulated state.
+    # reject). Exact mode drains the feed in one micro-batch ranked by
+    # file order, so the admitted count checks that ranking across all
+    # 128 files.
     epochs = []
     for e in range(128):
         fresh = spark.range(e * 1500, e * 1500 + 1000).select(
