@@ -19,3 +19,12 @@ def let(value: Column, body) -> Column:
     Nesting is fine; inner lambdas may capture outer variables.
     """
     return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier, so a projection
+    can be written as ONE SQL string (``selectExpr`` / ``F.expr``):
+    one JVM call where per-column Column builders cost several py4j
+    round trips per column. Any name is safe, spaces, dots and
+    backticks included."""
+    return "`" + name.replace("`", "``") + "`"

@@ -10,6 +10,8 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_script_spark.functions.exprs import sql_ident
+
 
 def detect_year_columns(columns: list[str], be_ok: bool = True) -> list[str]:
     """R1 helper: columns whose name is a plausible CE/BE year.
@@ -143,19 +145,21 @@ def pivoted_year_map(
     winner is last-write-wins deterministic; without it the pick is
     arbitrary (dropDuplicates) — never a crash.
 
+    The map aggregate is built as one SQL expression (one JVM call),
+    not as per-column Column builders: on a lookup-sized input the
+    builders cost more than running the plan.
+
     Ref: PublicApiController.php:910-975.
     """
     from etl_script_spark.operators.merge import dedupe_last
 
     deduped = dedupe_last(df, [key_col, year_col], order_col)
-    entry = F.struct(
-        F.col(year_col).cast("string").alias("key"),
-        F.struct(*[F.col(c).cast("double").alias(c) for c in value_cols]).alias("value"),
+    fields = ", ".join(f"CAST({q} AS DOUBLE) AS {q}" for q in map(sql_ident, value_cols))
+    years = F.expr(
+        "map_from_entries(sort_array(collect_list(struct("
+        f"CAST({sql_ident(year_col)} AS STRING) AS key, struct({fields}) AS value))))"
     )
-    return (
-        deduped.groupBy(key_col)
-        .agg(F.map_from_entries(F.sort_array(F.collect_list(entry))).alias("years"))
-    )
+    return deduped.groupBy(key_col).agg(years.alias("years"))
 
 
 def positional_extract(

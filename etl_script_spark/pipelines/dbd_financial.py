@@ -7,8 +7,24 @@ upsert-merged) → query surface (point lookup / all-years map).
 Scale: silver derivation is narrow (no shuffle — unpivot + expressions
 fan out per input row); the only shuffles are the gold pivot's groupBy
 (keyed on (tax_id, fiscal_year) — high cardinality, even) and the
-upsert anti-join. Store gold partitioned by fiscal_year so the P12
-point queries prune to one partition.
+upsert anti-join.
+
+Serving: the two lookup endpoints are called many times on one gold
+handle, so a fixed per-query Spark cost dominates them, not the scan.
+A handle whose optimizer size estimate is at most ``_PIN_MAX_BYTES``
+(512 KiB, measured below; ``spark.sql.autoBroadcastJoinThreshold``
+lowers it, and ``-1`` turns pinning off) is collected ONCE, on the
+first call, into a driver-side LocalRelation, and later calls query
+that copy: Spark folds the keyed filter and projection into the
+relation, so a point lookup runs no job and a year map runs one
+single-stage job. Larger handles are queried as they are. The copy is
+only sound if the handle's files never change: pass a snapshot handle,
+such as a ``spark.read`` of a ``write_audit_publish`` table's
+``current``. Such a handle keeps the file listing it was created with,
+and ``write_audit_publish`` never rewrites a published snapshot's
+files; a new snapshot is new files, seen by a new handle. A handle
+over files that are overwritten in place (e.g. a dynamic partition
+overwrite) would keep answering from its old copy once pinned.
 
 Ref: script_read_dbd_balance.py:225-285 (silver),
 ImportDbdFinancial.php:185-288 (gold), PublicApiController.php:779-985
@@ -17,12 +33,18 @@ ImportDbdFinancial.php:185-288 (gold), PublicApiController.php:779-985
 
 from __future__ import annotations
 
+import logging
+import weakref
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_script_spark.functions import dates, numerics, strings
+from etl_script_spark.functions.exprs import sql_ident
 from etl_script_spark.operators import merge as merge_ops
 from etl_script_spark.operators import reshape, rowfilters
+
+_log = logging.getLogger(__name__)
 
 # Representative TH→EN item map (the contract is the *mapping
 # operation*; the reference hard-codes a 12-item balance map at
@@ -124,17 +146,84 @@ def import_gate(
     return ok, skipped
 
 
+# Largest size estimate (compressed parquet bytes) pinned. Measured
+# per call on a sorted 4-file gold of 9 double columns, local[4] on a
+# 4-core Xeon VM, 4 GB driver, median of 25 calls, scan → pinned:
+#   estimate  rows   reused point  reused year map  fresh handle point
+#     37 KB     315    70 → 19 ms      164 → 81 ms       162 → 146 ms
+#    263 KB   3 500    68 → 20 ms      160 → 78 ms       139 → 144 ms
+#    499 KB   7 000    57 → 24 ms      135 → 81 ms       136 → 140 ms
+#    987 KB  14 000    51 → 24 ms      118 → 78 ms       106 → 148 ms
+#    1.5 MB  21 000    56 → 31 ms      133 → 92 ms       107 → 207 ms
+#     24 MB 350 000    70 → 416 ms     152 → 517 ms      168 → 1465 ms (15 calls)
+# A pinned lookup filters every pinned row in the driver's optimizer and
+# a fresh handle pays the collect on its first call, so both grow with
+# the table while the scan stays flat. Up to ~500 KB a reused handle
+# answers 2.4x+ faster and a single-use one costs within 4 % of a scan.
+_PIN_MAX_BYTES = 512 * 1024
+
+# Serving copy per gold handle: its pinned LocalRelation, or None when
+# the handle is served as it is. None, never the handle itself: a value
+# that refers to its weak key would keep that key alive.
+_SERVING: "weakref.WeakKeyDictionary[DataFrame, DataFrame | None]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _serving(df: DataFrame) -> DataFrame:
+    """The frame the lookup endpoints query in place of ``df``: a
+    driver-side LocalRelation copy when ``df`` is a deterministic batch
+    plan estimated at most ``_PIN_MAX_BYTES`` and
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes, else ``df`` itself.
+    Decided, and logged, once per handle; pinning runs one collect
+    job."""
+    try:
+        pinned = _SERVING[df]
+    except KeyError:
+        pinned = _SERVING[df] = _pin(df)
+    return df if pinned is None else pinned
+
+
+def _pin(df: DataFrame) -> DataFrame | None:
+    spark = df.sparkSession
+    jdf = df._jdf
+    qe = jdf.queryExecution()
+    if df.isStreaming or not qe.analyzed().deterministic():
+        _log.info("lookup serving: not pinned, not a deterministic batch plan")
+        return None
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    size = int(qe.optimizedPlan().stats().sizeInBytes())
+    if threshold < 0 or size > min(threshold, _PIN_MAX_BYTES):
+        _log.info(
+            "lookup serving: not pinned, estimated %d bytes against the "
+            "pin bound %d and spark.sql.autoBroadcastJoinThreshold=%d",
+            size, _PIN_MAX_BYTES, threshold,
+        )
+        return None
+    # built inside the JVM: exact Catalyst types, no Arrow/pickle trip
+    rows = jdf.collectAsList()
+    pinned = DataFrame(spark._jsparkSession.createDataFrame(rows, jdf.schema()), spark)
+    _log.info(
+        "lookup serving: pinned %d rows, estimated %d bytes", rows.size(), size
+    )
+    return pinned
+
+
 def company_financial(
     gold: DataFrame, tax_id: str, fiscal_year: int, cols: list[str]
 ) -> DataFrame:
     """P12/P13: the point-lookup query — keyed filter + fixed float
-    projection (PublicApiController.php:799-854)."""
-    return gold.filter(
+    projection (PublicApiController.php:799-854).
+
+    ``gold`` must be a snapshot handle whose files never change (see
+    the module docstring). The first call on a small handle runs one
+    collect job to pin it; later calls on it run none."""
+    return _serving(gold).filter(
         (F.col("tax_id") == tax_id) & (F.col("fiscal_year") == fiscal_year)
-    ).select(
+    ).selectExpr(
         "tax_id",
         "fiscal_year",
-        *[F.col(c).cast("double").alias(c) for c in cols],
+        *[f"CAST({q} AS DOUBLE) AS {q}" for q in map(sql_ident, cols)],
     )
 
 
@@ -142,10 +231,21 @@ def company_financial_all_years(
     gold: DataFrame, tax_id: str, year_from: int, year_to: int, cols: list[str]
 ) -> DataFrame:
     """R3: per-year map response for the all-years endpoint
-    (PublicApiController.php:884-985)."""
-    ranged = gold.filter(
+    (PublicApiController.php:884-985).
+
+    ``gold`` must be a snapshot handle whose files never change (see
+    the module docstring). The first call on a small handle runs one
+    collect job to pin it; on a pinned handle the map is then one
+    single-stage job."""
+    served = _serving(gold)
+    ranged = served.filter(
         (F.col("tax_id") == tax_id)
         & (F.col("fiscal_year") >= year_from)
         & (F.col("fiscal_year") <= year_to)
     )
+    if served is not gold:
+        # one partition satisfies both the dedupe's and the aggregate's
+        # clustering, so the plan has no Exchange; an unpinned handle
+        # keeps its scan parallel
+        ranged = ranged.coalesce(1)
     return reshape.pivoted_year_map(ranged, "tax_id", "fiscal_year", cols)

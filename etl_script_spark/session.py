@@ -19,8 +19,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 # Driver heap ceiling when SPARK_GRAFT_DRIVER_MEM is unset: 48 GB, the
 # local[32] posture, but never more than half of physical memory. G1
 # sizes its growth steps from the uncommitted part of the ceiling, so a
@@ -39,6 +37,18 @@ def default_driver_memory() -> str:
     return f"{max(1024, min(MAX_DEFAULT_DRIVER_MEM_MB, phys_mb // 2))}m"
 
 
+def default_cpus() -> str:
+    """Local core count, read at call time: ``SPARK_GRAFT_CPUS`` when
+    set, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return env
+    try:
+        return str(len(os.sched_getaffinity(0)))
+    except AttributeError:  # no affinity call on this platform
+        return str(os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "etl-script-spark",
     master: str | None = None,
@@ -47,15 +57,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism so the bench
-    driver controls core count without code changes.
+    The default master is ``local[n]`` and the default shuffle width
+    ``n``, both from ``default_cpus()``, so ``SPARK_GRAFT_CPUS`` sets
+    the core count without code changes.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -38,6 +38,15 @@ so simhash mode reads one file per micro-batch. A crawl gate that
 must near-dedup within the epoch runs the batch variant
 (``simhash_near_dups``) on the epoch first; chaining the two is a
 composition, not a new operator.
+
+Tie order caveat (simhash only): Spark's file source orders the feed
+by modification time with a stable sort over the directory listing,
+so files that share an mtime are batched in listing order, which
+depends on the file system (three one-row files with one mtime came
+out in creation order, not path order). Simhash admission depends on
+batch order, so such a feed may admit different documents on another
+file system. Give every file its own mtime, as ``write_epoch_feed``
+does. Exact mode ranks by (mtime, path) itself and is unaffected.
 """
 
 from __future__ import annotations
@@ -175,8 +184,11 @@ def stream_neardup_gate(
             )
         return simhash_fingerprints(df, id_col, text_col)
 
-    # the store: checkpointed fingerprint leaves, one per micro-batch
-    store = [fingerprint(store_init).select("fp").distinct().localCheckpoint()]
+    # the store: checkpointed fingerprint leaves, one per micro-batch.
+    # The initial leaf may repeat a fingerprint (an anti-join ignores
+    # duplicate keys on its right side) and is checkpointed lazily, by
+    # the first micro-batch that reads it: no job before the stream.
+    store = [fingerprint(store_init).select("fp").localCheckpoint(eager=False)]
 
     def _sink(batch_df: DataFrame) -> DataFrame:
         known = reduce(DataFrame.unionByName, store)

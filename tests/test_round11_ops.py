@@ -188,3 +188,48 @@ def test_default_driver_memory_capped_at_half_of_physical(monkeypatch):
     assert session.default_driver_memory() == "49152m"
     del pages["SC_PHYS_PAGES"]
     assert session.default_driver_memory() == "49152m"
+
+
+def test_default_cpus_read_at_call_time(monkeypatch):
+    """Master and shuffle width come from one core count, read when
+    the session is built: SPARK_GRAFT_CPUS when set, else the CPUs the
+    process may run on."""
+    import os
+
+    from etl_script_spark import session
+
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2}, raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session.default_cpus() == "3"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    assert session.default_cpus() == "6"
+
+    confs = {}
+
+    class FakeBuilder:
+        def appName(self, name):
+            return self
+
+        def master(self, m):
+            confs["master"] = m
+            return self
+
+        def config(self, k, v):
+            confs[k] = v
+            return self
+
+        def getOrCreate(self):
+            raise RuntimeError("stop before starting a session")
+
+    class FakeSession:
+        builder = FakeBuilder()
+
+    monkeypatch.setattr(session, "SparkSession", FakeSession)
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    try:
+        session.get_spark()
+    except RuntimeError:
+        pass
+    assert confs["master"] == "local[3]"
+    assert confs["spark.sql.shuffle.partitions"] == "3"

@@ -474,6 +474,42 @@ def test_exact_gates_drain_feed_in_one_micro_batch(spark, monkeypatch):
     assert (qg["asked"], qg["batches"]) == ([None], 1)
 
 
+def test_neardup_gate_runs_no_job_before_its_stream(spark, monkeypatch):
+    """The initial store is checkpointed by the first micro-batch that
+    reads it, not before the stream starts, and a store that repeats a
+    fingerprint admits what its distinct rows would."""
+    import uuid
+
+    from etl_script_spark.streaming import neardup
+
+    schema = "doc_id long, text string"
+    feed = _gate_feed(spark, [[(10, "stored doc"), (11, "new doc")],
+                              [(12, "new  doc"), (13, "other")]], schema)
+    sc = spark.sparkContext
+    group = f"ndg-{uuid.uuid4().hex}"
+    jobs_at_start = []
+    real = neardup._drain_feed
+
+    def wrapper(*args, **kwargs):
+        jobs_at_start.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(neardup, "_drain_feed", wrapper)
+    stores = {
+        "empty": ([], [10, 11, 13]),
+        "repeated": ([(1, "Stored doc"), (2, "stored  doc"), (3, "STORED doc")], [11, 13]),
+    }
+    for name, (store_rows, want) in stores.items():
+        store = spark.createDataFrame(store_rows, schema)
+        sc.setJobGroup(group, "neardup gate")
+        try:
+            out = neardup.stream_neardup_gate(spark, feed, schema, store)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs_at_start.pop() == 0, name
+        assert sorted(r["doc_id"] for r in out.collect()) == want, name
+
+
 def test_gates_remove_their_checkpoint_dirs(spark, monkeypatch, tmp_path):
     """Neither gate leaves a checkpoint directory behind, also when the
     stream times out."""
